@@ -1,242 +1,113 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark harness: registry bench queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
+Usage: python bench.py [name ...] [--reps N]
+
+Runs the registry's bench entries (``catalog.HEADLINE``), or the named
+registry queries, through ``run.run_query`` after ``run.warm``.  Each query
+is forced end-to-end with a noop-format write (full computation of every
+output column, no collect-to-driver cost, no result pruning shortcuts);
+with ``--reps N`` each runs N times and its median is recorded.  One line
+per run goes to stderr with the construct/action split; stdout gets ONE
+JSON line:
   {"metric": "total_wall_sec", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
-
-Each query is forced end-to-end with a noop-format write (full computation of
-every output column, no collect-to-driver cost, no result pruning shortcuts).
+   "queries": {name: sec, ...}, "construct_sec": {name: sec, ...},
+   "core20_wall_sec": N, "n_queries": N, "failed": {name: "Type: msg"},
+   "regressions": {...}, "sf": 0.1, "ratio_vs_anchor": R,
+   "ratio_vs_rolling": R, "note": "..."}
+Totals cover successful queries only; any failure exits 1.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ssis_to_dbt_spark import catalog  # noqa: E402
-from ssis_to_dbt_spark.session import build_session  # noqa: E402
-
-HEADLINE = [
-    "stg_sales_transactions",
-    "fct_sales_star",
-    "agg_daily_sales",
-    "dim_customer_scd2",
-    "orders_semi_join",
-    "incremental_merge_orders",
-    "merge_upsert_customers",
-    "events_tumbling_10min",
-    "events_sessionize",
-    "exact_dedup_docs",
-    "text_analysis_docs",
-    "minhash_pairs_docs",
-    "simhash_pairs_docs",
-    "topk_embeddings",
-    "lsh_topk_embeddings",
-    "knn_join_embeddings",
-    "window_customer_orders",
-    "embedding_neardup",
-    "events_sliding_30min",
-    "ivf_topk_embeddings",
-    "asof_attribution",
-    "range_join_sessions",
-    "chunk_docs",
-    "surprisal_docs",
-    "decontam_docs",
-    "pack_docs",
-    "mixture_docs",
-    "bloom_orders",
-    "semdedup_embeddings",
-    "cdc_apply_orders",
-    "incremental_rollup_sales",
-    "dup_spans_docs",
-    "zorder_events",
-    "resize_bmp_stats",
-    "source_cap_docs",
-    "dtsx_sales_fact_etl",
-    "gopher_quality_docs",
-    "hll_users_events",
-    "bpe_encode_docs",
-    "winnow_docs",
-    "funnel_events",
-    "project_embeddings",
-    "sorted_neighborhood_parts",
-    "cohort_retention_events",
-    "merged_intervals_events",
-    "mad_outlier_docs",
-    "kfold_docs",
-    "cube_orders",
-    "hard_negatives",
-    "split_leakage_docs",
-    "corpus_dedup_lines",
-    "label_prototypes",
-    "ccnet_buckets_docs",
-    "kmeans_embeddings",
-    "neardup_prune_docs",
-    "char_entropy_docs",
-    "temperature_mixture_docs",
-    "dsir_docs",
-    "dsir_apply_docs",
-    "curation_pipeline_docs",
-    "pack_nosplit_docs",
-    "crawl_ingest_docs",
-    "bm25_search_docs",
-    "nb_classifier_docs",
-    "ivf_index_probe",
-    "semantic_decontam_ivf",
-    "ci_filter_customers",
-    "ivf_recall_audit",
-    "hybrid_rrf_indexed",
-    "image_phash_neardup",
-    "image_phash_index",
-]
-
-# Frozen round-4 headline: the like-for-like trend metric.  The full HEADLINE
-# grows as operators land, which hides the trend inside the total; this list
-# NEVER changes, and its sum is emitted as core20_wall_sec so any round can be
-# gated mechanically against any other.
-CORE20 = [
-    "stg_sales_transactions",
-    "fct_sales_star",
-    "agg_daily_sales",
-    "dim_customer_scd2",
-    "orders_semi_join",
-    "incremental_merge_orders",
-    "merge_upsert_customers",
-    "events_tumbling_10min",
-    "events_sessionize",
-    "exact_dedup_docs",
-    "text_analysis_docs",
-    "minhash_pairs_docs",
-    "simhash_pairs_docs",
-    "topk_embeddings",
-    "lsh_topk_embeddings",
-    "knn_join_embeddings",
-    "window_customer_orders",
-    "embedding_neardup",
-    "events_sliding_30min",
-    "ivf_topk_embeddings",
-]
-assert set(CORE20) <= set(HEADLINE)
+from ssis_to_dbt_spark.run import run_query, session, warm  # noqa: E402
 
 
-def main() -> None:
+def _load_gate(path: str) -> dict[str, float]:
+    # one loader for both gate files: accepts the nested
+    # {"queries": {...}, ...} shape (anchor) AND the flat {name: sec} shape
+    # (rolling baseline), and raises loudly on anything else — a format
+    # drift must fail, not silently yield a None/NaN ratio
+    with open(path) as fh:
+        data = json.load(fh)
+    q = data.get("queries") if isinstance(data, dict) else None
+    if isinstance(q, dict):
+        data = q
+    if not isinstance(data, dict) or not all(
+        isinstance(v, (int, float)) for v in data.values()
+    ):
+        raise ValueError(f"{path}: unrecognized bench gate schema")
+    return data
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    reps = 1
+    if "--reps" in args:
+        i = args.index("--reps")
+        reps = int(args[i + 1])
+        del args[i : i + 2]
+    unknown = [n for n in args if n not in catalog.ALL_QUERIES]
+    if unknown or reps < 1:
+        print(f"usage: bench.py [name ...] [--reps N>=1]; unknown: {unknown}",
+              file=sys.stderr)
+        return 2
+    names = args or catalog.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = 0.0
-    spark = build_session(
-        app_name="ssis_to_dbt_spark_bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("ssis_to_dbt_spark_bench")
+    warm(spark, sf_dir)
 
-    # JVM/codegen warmup + parquet warm (outside the measured window;
-    # measures the engine, not the first directory listing or a cold OS
-    # page cache — a full noop read pulls every table's pages in, which is
-    # what makes run-to-run numbers comparable across machine states)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from ssis_to_dbt_spark.sources.readers import testdata
-
-    for df in testdata(spark, sf_dir).values():
-        df.write.format("noop").mode("overwrite").save()
-
-    # Python/Arrow worker warmup (daemon fork + Arrow serializer init costs
-    # ~8 s once per session; the Arrow-engine queries should be measured at
-    # steady state, same as the JVM JIT above)
-    spark.range(256, numPartitions=64).mapInArrow(
-        lambda it: it, "id long"
-    ).collect()
-    spark.range(256, numPartitions=64).groupBy("id").applyInPandas(
-        lambda pdf: pdf, "id long"
-    ).collect()
-
-    # r14 (r13 VERDICT #8): build/probe split for the entries that
-    # construct a persisted index inside the timed body — the entry
-    # records its build wall in catalog.SECTION_TIMES; the probe share
-    # is the remainder.  Informational only: every gate stays on totals.
-    sections: dict[str, dict[str, float]] = {}
-
-    release_off = os.environ.get(
-        "SPARK_GRAFT_BENCH_NO_RELEASE", ""
-    ).strip().lower() in ("1", "true", "yes", "on")
-
-    def release_leaked_blocks() -> None:
-        if release_off:
-            return
-        # r14 (inter-query hygiene, OUTSIDE the timed region): queries
-        # that localCheckpoint multi-consumer intermediates leave their
-        # materialized RDD blocks pinned in the shared session
-        # (~dozens per index/dedup entry).  Across 70+ queries the
-        # accumulation degrades LATER queries (measured: end-of-session
-        # gate re-runs 3-8x their in-loop time).  Dropping finished
-        # queries' blocks between timings frees memory without reusing
-        # anything — every query still computes from the parquet inputs.
-        try:
-            jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in jrdds.values():
-                jrdd.rdd().unpersist(False)
-        except Exception:
-            pass
-
-    def run_once(name: str) -> float:
-        fn = catalog.ALL_QUERIES[name]
-        catalog.SECTION_TIMES.pop(name, None)
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        sec = catalog.SECTION_TIMES.pop(name, None)
-        if sec and "build" in sec:
-            sections[name] = {
-                "build": round(sec["build"], 3),
-                "probe": round(max(dt - sec["build"], 0.0), 3),
-            }
-        release_leaked_blocks()
-        return dt
+    def run_once(name: str):
+        rec = run_query(spark, name, sf_dir)
+        print(json.dumps({"q": name, "wall_s": round(rec.wall_s, 3),
+                          "construct_s": round(rec.construct_s, 3),
+                          "action_s": round(rec.action_s, 3),
+                          "error": rec.error}),
+              file=sys.stderr, flush=True)
+        return rec
 
     times: dict[str, float] = {}
-    for name in HEADLINE:
-        times[name] = round(run_once(name), 3)
+    construct: dict[str, float] = {}
+    failed: dict[str, str] = {}
+    for name in names:
+        recs = [run_once(name) for _ in range(reps)]
+        errors = [r.error for r in recs if r.error]
+        if errors:
+            failed[name] = errors[0]
+            continue
+        recs.sort(key=lambda r: r.wall_s)
+        med = recs[len(recs) // 2]
+        times[name] = round(med.wall_s, 3)
+        construct[name] = round(med.construct_s, 3)
 
-    # Per-query regression gate (r12: gated against the FROZEN ANCHOR).
+    # Per-query regression gate against the FROZEN ANCHOR.
     # bench_anchor.json holds the earliest recorded quiet per-query
     # median and is NEVER refreshed — a regression can no longer hide by
-    # being absorbed into a rolling-baseline refresh (r11 VERDICT).
-    # bench_baseline.json stays as the ROLLING reference (latest quiet
-    # medians) for like-for-like round deltas; both ratios are reported.
-    # r9 rule unchanged: a one-shot exceedance is NOT a verdict — any
-    # query over 1.5x its anchor re-runs twice more and both its
-    # recorded time and the gate use the median of the 3 reps, so a
-    # single cold-start/noise spike cannot flag.  Only applied at the
-    # anchor's own scale factor; informational (the driver records the
-    # whole JSON line either way).
+    # being absorbed into a rolling-baseline refresh.  bench_baseline.json
+    # stays as the ROLLING reference (latest quiet medians) for
+    # like-for-like round deltas; both ratios are reported.  A one-shot
+    # exceedance is NOT a verdict — any query over 1.5x its anchor re-runs
+    # twice more and both its recorded time and the gate use the median of
+    # the 3 reps, so a single cold-start/noise spike cannot flag.  Only
+    # applied at the anchor's own scale factor; informational (the driver
+    # records the whole JSON line either way).
     here = os.path.dirname(os.path.abspath(__file__))
-    regressions: dict[str, dict[str, float]] = {}
+    regressions: dict[str, dict] = {}
     anchor: dict[str, float] = {}
     rolling: dict[str, float] = {}
     anchor_path = os.path.join(here, "bench_anchor.json")
     base_path = os.path.join(here, "bench_baseline.json")
-    def _load_gate(path: str) -> dict[str, float]:
-        # one loader for both gate files (r12 ADVICE): accepts the
-        # nested {"queries": {...}, ...} shape (anchor) AND the flat
-        # {name: sec} shape (rolling baseline), and raises loudly on
-        # anything else — a format drift must fail, not silently yield
-        # a None/NaN ratio
-        with open(path) as fh:
-            data = json.load(fh)
-        q = data.get("queries") if isinstance(data, dict) else None
-        if isinstance(q, dict):
-            data = q
-        if not isinstance(data, dict) or not all(
-            isinstance(v, (int, float)) for v in data.values()
-        ):
-            raise ValueError(f"{path}: unrecognized bench gate schema")
-        return data
-
     if os.path.exists(anchor_path):
         anchor = _load_gate(anchor_path)
     if os.path.exists(base_path):
@@ -246,13 +117,15 @@ def main() -> None:
             b = anchor.get(name)
             if b is None or b <= 0.3 or t <= 1.5 * b:
                 continue
-            reps = sorted([t, run_once(name), run_once(name)])
-            med = round(reps[1], 3)
+            reruns = [run_once(name) for _ in range(2)]
+            reps_s = sorted([t] + [round(r.wall_s, 3) for r in reruns
+                                   if not r.error])
+            med = round(statistics.median(reps_s), 3)
             times[name] = med
             if med > 1.5 * b:
                 regressions[name] = {"sec": med, "anchor_sec": b,
                                      "ratio": round(med / b, 2),
-                                     "reps": reps}
+                                     "reps": reps_s}
 
     def _ratio(base: dict[str, float]) -> float | None:
         common = [n for n in times if n in base and base[n] > 0]
@@ -266,28 +139,15 @@ def main() -> None:
     ratio_vs_rolling = _ratio(rolling) if sf == 0.1 else None
 
     total = round(sum(times.values()), 3)
-    core20 = round(sum(times[n] for n in CORE20), 3)
-    # TWO lines, headline LAST: the capture keeps the TAIL of stdout, so
-    # the compact line (every verdict-relevant number, guaranteed short)
-    # must be the final line — BENCH_r09 lost a head-first headline to
-    # exactly that truncation.  Both lines are self-contained JSON.
+    core20 = round(sum(t for n, t in times.items() if n in catalog.CORE20), 3)
+    # ONE line, and the last: the capture keeps the TAIL of stdout, so the
+    # line must carry every verdict-relevant number including the per-query
+    # map (71 floats is a few KB; well under any line-length risk)
     print(json.dumps(
         {"metric": "total_wall_sec", "value": total, "unit": "sec",
-         "queries": times, "core20_wall_sec": core20,
-         "regressions": regressions, "sf": sf,
-         "ratio_vs_anchor": ratio_vs_anchor,
-         "ratio_vs_rolling": ratio_vs_rolling,
-         "sections": sections},
-        separators=(",", ":"),
-    ))
-    # r15 (r14 VERDICT #2): the FINAL line — the only one guaranteed to
-    # survive tail capture — must carry the per-query map, or the driver's
-    # per-query PERF comparison and scaling block stay empty.  71 floats is
-    # a few KB; well under any line-length risk.
-    print(json.dumps(
-        {"metric": "total_wall_sec", "value": total, "unit": "sec",
-         "queries": times,
+         "queries": times, "construct_sec": construct,
          "core20_wall_sec": core20, "n_queries": len(times),
+         "failed": failed,
          "regressions": regressions, "sf": sf,
          "ratio_vs_anchor": ratio_vs_anchor,
          "ratio_vs_rolling": ratio_vs_rolling,
@@ -299,11 +159,13 @@ def main() -> None:
                   "runs historically show a uniform ~1.2-1.4x uplift vs "
                   "quiet runs (shared-machine load); compare against "
                   "BENCH_LOCAL_r{N}.json before reading per-query deltas "
-                  "as code regressions")},
+                  "as code regressions.  Totals cover successful queries "
+                  "only; entries in failed did not finish")},
         separators=(",", ":"),
     ))
     spark.stop()
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -21,6 +21,8 @@ Layout (see SURVEY.md §7.1):
   streaming.py      tumbling/sliding/session windows, watermark incremental
   pipeline.py       model DAG, topo order, materializations, vars
   catalog.py        query registry backing __spark_entry__.py
+  blocks.py         registry-owned localCheckpoint block lifecycle
+  run.py            the one run path: session, warm-up, run_query records
 """
 
 __version__ = "0.3.0"

@@ -1,71 +1,119 @@
-"""Engine-owned lifecycle for ``localCheckpoint`` blocks (r15; r14 VERDICT
-"Next round" #5).
+"""Registry-owned lifecycle for ``localCheckpoint`` blocks.
 
 ``localCheckpoint`` pins its materialized RDD blocks in the session's
-storage memory until someone unpersists them.  The query paths declare
-checkpoints for multi-consumer intermediates (dedup signature passes, IVF
-routing, crawl-loop state, CC label rounds); in a long-lived session those
-blocks accumulated without bound — measured in r14 as end-of-session
-re-runs degrading to 3-8x their in-loop time, worked around by a bench-side
-scrub (``bench.py:release_leaked_blocks``).  This module moves ownership
-into the engine:
+storage memory until someone unpersists them; in a long-lived session the
+blocks of finished queries would accumulate without bound (measured as
+end-of-session re-runs at 3-8x their in-loop time).  The query registry
+wraps every entry, once, in :func:`scoped`, so the checkpoint call sites
+need no registration:
 
-- :func:`checkpoint` — ``df.localCheckpoint(eager=...)`` plus registration
-  of the checkpointed RDD in the ACTIVE QUERY SCOPE.  With no scope active
-  (direct library use, streaming state that manages its own lineage) it
-  degrades to a bare ``localCheckpoint``.
-- :func:`query_scope` — every ``catalog.ALL_QUERIES`` entry runs inside
-  one.  Entering a new TOP-LEVEL scope first releases every block left by
-  previously finished scopes: by the time the next query is being built,
-  the previous query's consumer (its write/collect) has finished.  Nested
-  builders (suite entries composing other entries) share the outer scope.
-- :func:`release` — immediate targeted release for a checkpoint that is
-  fully consumed INSIDE a builder (a collected edge list, a superseded
-  iteration state, a frame whose derived result was itself materialized).
-  This is the piece that bounds memory WITHIN one query: iterative
-  algorithms release round N-1's blocks as soon as round N's checkpoint
-  is materialized.
+- :func:`query_scope` records which persistent RDD ids appeared while a
+  top-level registry query was being built.  Every ``df.localCheckpoint``,
+  eager or lazy, registers its RDD as persistent when it is called.
+- Those blocks are released when the NEXT top-level registry call enters,
+  never earlier: a lazy checkpoint is first computed by the query's
+  consumer, which runs after the builder returns, and unpersisting it
+  before then fails the query (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
+- Nested registry calls (suites composing other entries) share the
+  outermost scope; so do calls that overlap from several threads, but the
+  contract below assumes one thread makes registry calls at a time.
+- :func:`release` unpersists one fully consumed checkpoint at once; it
+  bounds memory within one query (superseded iteration state).
 
-Contract: a DataFrame returned by a catalog query stays valid until the
-next catalog query is BUILT — the stage-materialize posture the Pipeline
-orchestrator already imposes (each stage's output is consumed before the
-next stage starts).  For interleaved multi-query consumption set
-``SPARK_GRAFT_KEEP_BLOCKS=1``: checkpoints stay pinned for the session
-and the caller owns cleanup (the pre-r15 behavior).
+Contract: a DataFrame returned by a registry query stays valid until the
+next registry call.  There is no escape hatch.  Persistent RDDs created
+outside a registry call are never touched.
 """
 
 from __future__ import annotations
 
-import os
+import functools
+import threading
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-__all__ = ["checkpoint", "release", "query_scope", "release_pending"]
+__all__ = ["query_scope", "scoped", "release", "release_pending"]
+
+_lock = threading.Lock()
+_depth = 0  # open registry calls, across threads
+_entry_ids: set[int] = set()  # persistent before the outermost call began
+_pending: set[int] = set()  # left by finished scopes; released at next entry
+_pending_sc: SparkContext | None = None  # the context _pending belongs to
 
 
-def _keep_blocks() -> bool:
-    return os.environ.get("SPARK_GRAFT_KEEP_BLOCKS", "").strip().lower() in (
-        "1",
-        "true",
-        "yes",
-        "on",
-    )
+def _persistent_ids(sc: SparkContext) -> set[int]:
+    # the ids as one string: converting the map through py4j costs ~100x more
+    keys = sc._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(k) for k in keys.split(",")} if keys else set()
 
 
-# JVM RDD handles (not DataFrames: holding the py4j RDD object keeps release
-# independent of the DataFrame's lifetime and costs one py4j call to drop).
-_scope: list | None = None  # collecting while a top-level query builds
-_pending: list = []  # finished scopes' RDDs, released at the next entry
+def _unpersist(sc: SparkContext, ids) -> None:
+    for rdd_id in ids:
+        sc._jsc.sc().unpersistRDD(rdd_id, False)
+
+
+def _take_pending(sc: SparkContext | None) -> set[int]:
+    """Empty the pending set; ids of a stopped context are dropped."""
+    global _pending
+    stale, _pending = _pending, set()
+    return stale if sc is not None and sc is _pending_sc else set()
+
+
+def release_pending() -> None:
+    """Release every block left by already-finished query scopes."""
+    sc = SparkContext._active_spark_context
+    with _lock:
+        stale = _take_pending(sc)
+        if stale:
+            _unpersist(sc, stale)
+
+
+@contextmanager
+def query_scope():
+    """Scope one top-level registry call's checkpoint blocks.
+
+    Entering the outermost scope releases the blocks of earlier scopes;
+    leaving it queues the ids that appeared inside for the next entry.
+    Without an active SparkContext the scope does nothing.
+    """
+    global _depth, _entry_ids, _pending_sc
+    sc = SparkContext._active_spark_context
+    with _lock:
+        if _depth == 0 and sc is not None:
+            now = _persistent_ids(sc)
+            stale = _take_pending(sc) & now
+            _unpersist(sc, stale)
+            _entry_ids = now - stale
+        _depth += 1
+    try:
+        yield
+    finally:
+        with _lock:
+            _depth -= 1
+            if _depth == 0 and sc is not None:
+                _pending.update(_persistent_ids(sc) - _entry_ids)
+                _pending_sc = sc
+
+
+def scoped(builder):
+    """Wrap a registry builder so each call runs inside :func:`query_scope`."""
+
+    @functools.wraps(builder)
+    def run(*args, **kwargs):
+        with query_scope():
+            return builder(*args, **kwargs)
+
+    return run
 
 
 def _ckpt_jrdd(df: DataFrame):
     """The JVM RDD a localCheckpointed DataFrame pins, or None.
 
     ``Dataset.localCheckpoint`` (eager or lazy) returns a Dataset over a
-    ``LogicalRDD`` wrapping the internal RDD it marked persistent; that RDD
-    is exactly what ``unpersist`` must hit.  Defensive: any plan shape that
-    isn't a plain LogicalRDD yields None (caller skips registration).
+    ``LogicalRDD`` wrapping the RDD it marked persistent.  Any other plan
+    shape yields None.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -76,63 +124,13 @@ def _ckpt_jrdd(df: DataFrame):
         return None
 
 
-def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager=eager)`` with scope-registered blocks."""
-    out = df.localCheckpoint(eager=eager)
-    if _scope is not None and not _keep_blocks():
-        jrdd = _ckpt_jrdd(out)
-        if jrdd is not None:
-            _scope.append(jrdd)
-    return out
-
-
 def release(df: DataFrame | None) -> None:
     """Immediately unpersist a checkpointed frame's blocks (async).
 
     For intermediates fully consumed inside a builder: the caller asserts
-    nothing will evaluate ``df`` again.  No-op on None, non-checkpoint
-    frames, and under ``SPARK_GRAFT_KEEP_BLOCKS=1`` (so an A/B of the
-    lifecycle can hold everything pinned).
+    nothing will evaluate ``df`` again.  No-op on None and on frames that
+    are not checkpoints.
     """
-    if df is None or _keep_blocks():
-        return
-    jrdd = _ckpt_jrdd(df)
+    jrdd = None if df is None else _ckpt_jrdd(df)
     if jrdd is not None:
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass
-
-
-def release_pending() -> None:
-    """Release every block left by already-finished query scopes."""
-    global _pending
-    stale, _pending = _pending, []
-    for jrdd in stale:
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass
-
-
-@contextmanager
-def query_scope():
-    """Scope one top-level catalog query's checkpoint blocks.
-
-    Entering a NEW top-level scope releases previous scopes' blocks
-    (their consumers have finished — catalog queries are consumed before
-    the next one is built).  Nested entries inherit the outer scope, so a
-    suite's sub-builders register into the suite's scope.
-    """
-    global _scope, _pending
-    if _scope is not None:  # nested builder: share the outer scope
-        yield
-        return
-    if not _keep_blocks():
-        release_pending()
-    _scope = []
-    try:
-        yield
-    finally:
-        _pending.extend(_scope)
-        _scope = None
+        jrdd.unpersist(False)

@@ -21,10 +21,13 @@ Operator coverage tags reference SURVEY.md §2 (S/P/E/J/A/W/O/U/M/D/C/ST/F/V).
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import blocks
 from .local_rel import local_rows_df as _local_rows
 from .expressions import (
     compile_ssis_expression,
@@ -2051,19 +2054,6 @@ FROM orders
 # (truncate+reload), SalesFactETL.dtsx:293-306 (DELETE range + INSERT),
 # InventorySync.dtsx:266-269 (audit insert + flag update).
 # ---------------------------------------------------------------------------
-
-
-# r14 (r13 VERDICT "What's wrong" #2 / Next #8): entries that BUILD a
-# persisted index inside the timed query body record the build's wall
-# here, keyed by entry name.  bench.py reads (and clears) this after
-# each timed run and reports {build, probe} alongside the total, so a
-# probe regression can't hide behind build noise.  Gates stay on totals.
-SECTION_TIMES: dict[str, dict[str, float]] = {}
-
-
-def _record_build(entry: str, seconds: float) -> None:
-    sec = SECTION_TIMES.setdefault(entry, {})
-    sec["build"] = round(sec.get("build", 0.0) + seconds, 3)
 
 
 def _rt_tmpdir(name: str) -> str:
@@ -5391,15 +5381,11 @@ def q_ivf_index_probe(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir)["embeddings"]
-    import time as _time
-
     base = emb.filter(F.col("vec_id") % 7 != 0)
     delta = emb.filter(F.col("vec_id") % 7 == 0)
     path = _rt_tmpdir("ivf_index")
-    _t0 = _time.time()
     idx0 = write_ivf_index(base, path, n_cells=8)
     idx = append_ivf_index(spark, path, delta, index=idx0)
-    _record_build("ivf_index_probe", _time.time() - _t0)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -5473,15 +5459,11 @@ def q_ivf_recall_audit(spark, sf_dir):
     probes, and hit counts for all three nprobe arms from the same
     centroid construction.  The nprobe=8 arm doubles as the sanity
     bound: n_hits = k for every query."""
-    import time as _time
-
     from .text.similarity import ivf_recall_at_k, write_ivf_index
 
     emb = _t(spark, sf_dir)["embeddings"]
     path = _rt_tmpdir("ivf_recall")
-    _t0 = _time.time()
     idx = write_ivf_index(emb, path, n_cells=8)
-    _record_build("ivf_recall_audit", _time.time() - _t0)
     queries = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -6074,20 +6056,14 @@ def q_hybrid_rrf_indexed(spark, sf_dir):
 
     docs = _t(spark, sf_dir)["documents"]
     emb = _t(spark, sf_dir)["embeddings"]
-    import time as _time
-
     path = _rt_tmpdir("hybrid_idx")
     prefix = "bm25h_" + _os.path.basename(path).rsplit("_", 1)[-1]
     try:
-        _t0 = _time.time()
         bidx = write_bm25_index(docs, prefix, f"{path}/t")
-        _record_build("hybrid_rrf_indexed", _time.time() - _t0)
         bm = bm25_index_probe(bidx, _BM25_QUERIES, top_k=10).select(
             "query_id", "doc_id", "rn"
         )
-        _t0 = _time.time()
         iidx = write_ivf_index(emb, f"{path}/ivf", n_cells=8)
-        _record_build("hybrid_rrf_indexed", _time.time() - _t0)
         qv = emb.filter(F.col("vec_id").isin([0, 50, 100])).select(
             F.when(F.col("vec_id") == 0, F.lit("q_hash_join"))
             .when(F.col("vec_id") == 50, F.lit("q_scan_batch"))
@@ -7406,14 +7382,10 @@ def q_image_phash_index(spark, sf_dir):
     fp = image_phash(media, method="dhash").localCheckpoint(eager=False)
     b1 = fp.filter(F.col("media_id") % 60 == 0)
     b2 = fp.filter(F.col("media_id") % 60 == 30)
-    import time as _time
-
     path = _rt_tmpdir("phash_index")
     prefix = "phidx_" + _os.path.basename(path).rsplit("_", 1)[-1]
     try:
-        _t0 = _time.time()
         write_phash_index(b1, prefix, f"{path}/t")
-        _record_build("image_phash_index", _time.time() - _t0)
         res = ingest_media_batch(spark, b2, prefix, batch_id=1)
         out = _union_all([
             res.kept.select(
@@ -10436,455 +10408,309 @@ FROM ({SQL_TIME_CONTRACT}) _tc
 
 
 # ---------------------------------------------------------------------------
-# Registry.
+# Registry: the one place a query is declared.
 #
-# ALL_QUERIES holds every individual query (used by pytest, bench.py, and
-# plan assertions).  QUERIES — the driver contract — is the 50-entry window
-# built below from _DRIVER_WINDOW: individual queries plus the merged suites,
-# sized so the driver's 50-entry verdict cap covers every operator.
+# Each entry names its builder, its DuckDB oracle SQL (None: rows-only) and
+# its tags: ``window`` puts it in QUERIES/ORACLES, the 50-entry driver
+# contract, sized so the driver's verdict cap covers every operator;
+# ``core20`` marks the frozen round-4 bench set, whose sum (core20_wall_sec)
+# is the like-for-like trend metric and NEVER changes; ``bench`` marks the
+# rest of the bench HEADLINE.  Table order is the order of every derived
+# list.  Each builder is wrapped once in ``blocks.scoped``, which owns the
+# query's checkpoint blocks (see blocks.py for the contract).
 # ---------------------------------------------------------------------------
 
-ALL_QUERIES = {
-    "stg_sales_transactions": q_stg_sales_transactions,
-    "fct_sales_star": q_fct_sales_star,
-    "agg_daily_sales": q_agg_daily_sales,
-    "dim_customer_scd2": q_dim_customer_scd2,
-    "expr_strings_customer": q_expr_strings_customer,
-    "expr_dates_orders": q_expr_dates_orders,
-    "conditional_split_sizes": q_conditional_split_sizes,
-    "top_events": q_top_events,
-    "union_merge_segments": q_union_merge_segments,
-    "orders_semi_join": q_orders_semi_join,
-    "fk_violations_current": q_fk_violations_current,
-    "duplicate_order_days": q_duplicate_order_days,
-    "watermark_incremental_events": q_watermark_incremental_events,
-    "validation_scalars": q_validation_scalars,
-    "incremental_merge_orders": q_incremental_merge_orders,
-    "quality_report": q_quality_report,
-    "exact_dedup_docs": q_exact_dedup_docs,
-    "text_analysis_docs": q_text_analysis_docs,
-    "ngram_jaccard_docs": q_ngram_jaccard_docs,
-    "minhash_pairs_docs": q_minhash_pairs_docs,
-    "simhash_pairs_docs": q_simhash_pairs_docs,
-    "minhash_pairs_md5": q_minhash_pairs_md5,
-    "simhash_pairs_md5": q_simhash_pairs_md5,
-    "topk_embeddings": q_topk_embeddings,
-    "lsh_topk_embeddings": q_lsh_topk_embeddings,
-    "lsh_topk_md5": q_lsh_topk_md5,
-    "knn_join_embeddings": q_knn_join_embeddings,
-    "events_tumbling_10min": q_events_tumbling_10min,
-    "events_sliding_30min": q_events_sliding_30min,
-    "events_sessionize": q_events_sessionize,
-    "pipeline_dag": q_pipeline_dag,
-    "merge_upsert_customers": q_merge_upsert_customers,
-    "script_escape_hatch": q_script_escape_hatch,
-    "multimodal_features": q_multimodal_features,
-    "bmp_decode_stats": q_bmp_decode_stats,
-    "png_decode_stats": q_png_decode_stats,
-    "jpeg_decode_stats": q_jpeg_decode_stats,
-    "dataset_profile": q_dataset_profile,
-    "corpus_curation": q_corpus_curation_suite,
-    "corpus_curation_enrich": q_corpus_curation,
-    "curation_pipeline_docs": q_curation_pipeline_docs,
-    "crawl_ingest_docs": q_crawl_ingest_docs,
-    "crawl_wb_dedup_docs": q_crawl_wb_dedup_docs,
-    "gopher_quality_docs": q_gopher_quality_docs,
-    "hll_users_events": q_hll_users_events,
-    "bpe_encode_docs": q_bpe_encode_docs,
-    "winnow_docs": q_winnow_docs,
-    "funnel_events": q_funnel_events,
-    "cohort_retention_events": q_cohort_retention_events,
-    "merged_intervals_events": q_merged_intervals_events,
-    "split_leakage_docs": q_split_leakage_docs,
-    "corpus_dedup_lines": q_corpus_dedup_lines,
-    "hash_split_docs": q_hash_split_docs,
-    "kfold_docs": q_kfold_docs,
-    "project_embeddings": q_project_embeddings,
-    "sorted_neighborhood_parts": q_sorted_neighborhood_parts,
-    "token_budget_docs": q_token_budget_docs,
-    "chunk_docs": q_chunk_docs,
-    "surprisal_docs": q_surprisal_docs,
-    "token_ops_docs": q_token_ops_docs,
-    "sql_task_pricing": q_sql_task_pricing,
-    "embedding_neardup": q_embedding_neardup,
-    "window_customer_orders": q_window_customer_orders,
-    "roundtrip_append": q_roundtrip_append,
-    "roundtrip_overwrite": q_roundtrip_overwrite,
-    "roundtrip_partition_overwrite": q_roundtrip_partition_overwrite,
-    "roundtrip_csv": q_roundtrip_csv,
-    "roundtrip_json": q_roundtrip_json,
-    "roundtrip_audit_update": q_roundtrip_audit_update,
-    "streaming_roundtrip": q_streaming_roundtrip,
-    "salted_agg_events": q_salted_agg_events,
-    "foreach_segments": q_foreach_segments,
-    "bucketed_join_orders": q_bucketed_join_orders,
-    "validation_rollup": q_validation_rollup,
-    "parallel_table_dag": q_parallel_table_dag,
-    "roundtrip_excel": q_roundtrip_excel,
-    "roundtrip_xls": q_roundtrip_xls,
-    "roundtrip_orc": q_roundtrip_orc,
-    "roundtrip_compact": q_roundtrip_compact,
-    "roundtrip_evolve": q_roundtrip_evolve,
-    "rest_landing": q_rest_landing,
-    "stratified_docs": q_stratified_docs,
-    "stateful_totals": q_stateful_totals,
-    "ivf_topk_embeddings": q_ivf_topk,
-    "neardup_clusters": q_neardup_clusters,
-    "asof_attribution": q_asof_attribution,
-    "range_join_sessions": q_range_join_sessions,
-    "events_rollup": q_events_rollup,
-    "kmv_shingles": q_kmv_shingles,
-    "quantize_embeddings": q_quantize_embeddings,
-    "pivot_order_matrix": q_pivot_order_matrix,
-    "unpivot_order_matrix": q_unpivot_order_matrix,
-    "median_order_totals": q_median_order_totals,
-    "pii_redaction": q_pii_redaction,
-    "fuzzy_part_names": q_fuzzy_part_names,
-    "pagerank_parts": q_pagerank_parts,
-    "json_props_events": q_json_props_events,
-    "zorder_events": q_zorder_events,
-    "events_payload_layout": q_events_payload_layout,
-    "rolling_revenue_7d": q_rolling_revenue_7d,
-    "cdc_orders_diff": q_cdc_orders_diff,
-    "cdc_apply_orders": q_cdc_apply_orders,
-    "cdc_orders": q_cdc_orders,
-    "containment_docs": q_containment_docs,
-    "wav_decode_stats": q_wav_decode_stats,
-    "resize_bmp_stats": q_resize_bmp_stats,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "mixture_docs": q_mixture_docs,
-    "pack_docs": q_pack_docs,
-    "pack_nosplit_docs": q_pack_nosplit_docs,
-    "decontam_docs": q_decontam_docs,
-    "bloom_orders": q_bloom_orders,
-    "retry_dag": q_retry_dag,
-    "iqr_outlier_docs": q_iqr_outlier_docs,
-    "mad_outlier_docs": q_mad_outlier_docs,
-    "cube_orders": q_cube_orders,
-    "hard_negatives": q_hard_negatives,
-    "label_prototypes": q_label_prototypes,
-    "ccnet_buckets_docs": q_ccnet_buckets_docs,
-    "semdedup_embeddings": q_semdedup_embeddings,
-    "dedup_lines_docs": q_dedup_lines_docs,
-    "dup_spans_docs": q_dup_spans_docs,
-    "incremental_rollup_sales": q_incremental_rollup_sales,
-    "cms_tokens_docs": q_cms_tokens_docs,
-    "weighted_sample_docs": q_weighted_sample_docs,
-    "source_cap_docs": q_source_cap_docs,
-    "bpe_merges_docs": q_bpe_merges_docs,
-    "gap_fill_events": q_gap_fill_events,
-    "agg_daily_rollup": q_agg_daily_rollup,
-    "kmeans_embeddings": q_kmeans_embeddings,
-    "neardup_prune_docs": q_neardup_prune_docs,
-    "cluster_split_docs": q_cluster_split_docs,
-    "mixed_lang_docs": q_mixed_lang_docs,
-    "cross_dedup_docs": q_cross_dedup_docs,
-    "decay_events": q_decay_events,
-    "char_entropy_docs": q_char_entropy_docs,
-    "temperature_mixture_docs": q_temperature_mixture_docs,
-    "dsir_docs": q_dsir_docs,
-    "dsir_apply_docs": q_dsir_apply_docs,
-    "dsir_merge_docs": q_dsir_merge_docs,
-    # merged driver-window suites
-    "quality_validation_report": q_quality_validation_report,
-    "containment_kmv_docs": q_containment_kmv_docs,
-    "ann_topk_suite": q_ann_topk_suite,
-    "events_windows": q_events_windows,
-    "events_totals_suite": q_events_totals_suite,
-    "asof_range_joins": q_asof_range_joins,
-    "orchestration_dag": q_orchestration_dag,
-    "multimodal_decode": q_multimodal_decode,
-    "image_phash_neardup": q_image_phash_neardup,
-    "image_phash_index": q_image_phash_index,
-    "sampling_splits": q_sampling_splits,
-    "pii_tfidf_docs": q_pii_tfidf_docs,
-    "pivot_unpivot_orders": q_pivot_unpivot_orders,
-    "median_rolling_orders": q_median_rolling_orders,
-    "pivot_median_orders": q_pivot_median_orders,
-    "dtsx_sales_fact_etl": q_dtsx_sales_fact_etl,
-    "dtsx_customer_load": q_dtsx_customer_load,
-    "dtsx_inventory_sync": q_dtsx_inventory_sync,
-    "dtsx_packages": q_dtsx_packages,
-    "dtsx_order_routing": q_dtsx_order_routing,
-    "fps_seeds": q_fps_seeds,
-    "text_analysis_docs_expr": q_text_analysis_docs_expr,
-    "parts_fuzzy_pagerank": q_parts_fuzzy_pagerank,
-    "roundtrip_sinks": q_roundtrip_sinks,
-    "join_strategies": q_join_strategies,
-    "ci_collation_customers": q_ci_collation_customers,
-    "ci_group_customers": q_ci_group_customers,
-    "ci_filter_customers": q_ci_filter_customers,
-    "ivf_recall_audit": q_ivf_recall_audit,
-    "hybrid_rrf_indexed": q_hybrid_rrf_indexed,
-    "time_contract_events": q_time_contract_events,
-    "bm25_search_docs": q_bm25_search_docs,
-    "nb_classifier_docs": q_nb_classifier_docs,
-    "ivf_index_probe": q_ivf_index_probe,
-    "bm25_index_probe": q_bm25_index_probe,
-    "streaming_ivf_probe": q_streaming_ivf_probe,
-    "streaming_bm25_probe": q_streaming_bm25_probe,
-    "hybrid_rrf_docs": q_hybrid_rrf_docs,
-    "semantic_decontam_embeddings": q_semantic_decontam_embeddings,
-    "semantic_decontam_ivf": q_semantic_decontam_ivf,
-    "shuffle_shards_docs": q_shuffle_shards_docs,
-}
 
-ALL_ORACLES = {
-    "stg_sales_transactions": _oracle_double(
-        SQL_STG_SALES, ["gross_amount", "net_amount", "discount_pct"]
-    ),
-    "fct_sales_star": _oracle_double(SQL_FCT_SALES, ["net_amount"]),
-    "agg_daily_sales": _oracle_double(
-        SQL_AGG_DAILY, ["total_quantity", "total_gross", "total_net"]
-    ),
-    "dim_customer_scd2": SQL_DIM_SCD2,
-    "expr_strings_customer": SQL_EXPR_STRINGS,
-    "expr_dates_orders": SQL_EXPR_DATES,
-    "conditional_split_sizes": SQL_SPLIT_SIZES,
-    "top_events": SQL_TOP_EVENTS,
-    "union_merge_segments": SQL_UNION_MERGE,
-    "orders_semi_join": SQL_SEMI,
-    "fk_violations_current": SQL_FK_VIOL,
-    "duplicate_order_days": SQL_DUP_DAYS,
-    "watermark_incremental_events": SQL_WATERMARK,
-    "validation_scalars": SQL_VALIDATION_SCALARS,
-    "incremental_merge_orders": SQL_INCR_MERGE,
-    "quality_report": SQL_QUALITY,
-    "exact_dedup_docs": SQL_EXACT_DEDUP,
-    "text_analysis_docs": SQL_TEXT_ANALYSIS,
-    "ngram_jaccard_docs": SQL_NGRAM_JACCARD_SUITE,
-    "topk_embeddings": SQL_TOPK_EMB,
-    "knn_join_embeddings": SQL_KNN_JOIN,
-    "events_tumbling_10min": _oracle_double(SQL_TUMBLING, ["sum_value"]),
-    "events_sliding_30min": SQL_SLIDING,
-    "events_sessionize": SQL_SESSIONIZE,
-    "pipeline_dag": _oracle_double(SQL_PIPELINE_DAG, ["total_net"]),
-    "merge_upsert_customers": SQL_MERGE_UPSERT,
-    "script_escape_hatch": SQL_SCRIPT_HATCH,
-    "multimodal_features": SQL_MULTIMODAL,
-    "bmp_decode_stats": SQL_BMP_STATS,
-    "png_decode_stats": SQL_PNG_STATS,
-    "jpeg_decode_stats": SQL_JPEG_STATS,
-    "dataset_profile": SQL_DATASET_PROFILE,
-    "corpus_curation": SQL_CORPUS_CURATION_SUITE,
-    "corpus_curation_enrich": SQL_CORPUS_CURATION,
-    "curation_pipeline_docs": SQL_CURATION_PIPELINE,
-    "crawl_ingest_docs": SQL_CRAWL_INGEST_SUITE,
-    "crawl_wb_dedup_docs": SQL_CRAWL_WB_DEDUP,
-    "gopher_quality_docs": SQL_GOPHER_QUALITY,
-    "hll_users_events": SQL_HLL_USERS_EVENTS,
-    "bpe_encode_docs": SQL_BPE_ENCODE,
-    "winnow_docs": SQL_WINNOW,
-    "funnel_events": SQL_FUNNEL,
-    "cohort_retention_events": SQL_COHORT_RETENTION,
-    "merged_intervals_events": SQL_MERGED_INTERVALS,
-    "split_leakage_docs": SQL_SPLIT_LEAKAGE,
-    "corpus_dedup_lines": SQL_CORPUS_DEDUP_LINES,
-    "hash_split_docs": SQL_HASH_SPLIT,
-    "kfold_docs": SQL_KFOLD,
-    "project_embeddings": SQL_PROJECT_EMBEDDINGS,
-    "sorted_neighborhood_parts": SQL_SORTED_NEIGHBORHOOD,
-    "token_budget_docs": SQL_TOKEN_BUDGET,
-    "chunk_docs": SQL_CHUNK_DOCS,
-    "surprisal_docs": SQL_SURPRISAL,
-    "token_ops_docs": SQL_TOKEN_OPS,
-    "sql_task_pricing": SQL_PRICING_SUMMARY,
-    "minhash_pairs_md5": SQL_MINHASH_MD5_SUITE,
-    "simhash_pairs_md5": SQL_SIMHASH_MD5,
-    "lsh_topk_md5": SQL_LSH_TOPK_MD5,
-    "embedding_neardup": SQL_EMB_NEARDUP,
-    "roundtrip_append": SQL_RT_APPEND,
-    "roundtrip_overwrite": SQL_RT_OVERWRITE,
-    "roundtrip_partition_overwrite": SQL_RT_DPO,
-    "roundtrip_csv": SQL_RT_CSV,
-    "roundtrip_json": SQL_RT_JSON,
-    "roundtrip_audit_update": SQL_RT_AUDIT,
-    "streaming_roundtrip": SQL_STREAMING_RT,
-    "salted_agg_events": SQL_SALTED_AGG,
-    "foreach_segments": SQL_FOREACH,
-    "bucketed_join_orders": SQL_BUCKETED_JOIN,
-    "validation_rollup": SQL_VALIDATION_ROLLUP,
-    "parallel_table_dag": SQL_PARALLEL_DAG,
-    "roundtrip_excel": SQL_RT_EXCEL,
-    "roundtrip_xls": SQL_RT_EXCEL,
-    "rest_landing": SQL_REST_LANDING,
-    "stratified_docs": SQL_STRATIFIED,
-    "stateful_totals": SQL_STATEFUL_TOTALS,
-    "ivf_topk_embeddings": SQL_IVF_TOPK,
-    "neardup_clusters": SQL_NEARDUP_CLUSTERS,
-    "asof_attribution": SQL_ASOF_ATTRIBUTION,
-    "range_join_sessions": SQL_RANGE_JOIN,
-    "events_rollup": SQL_EVENTS_ROLLUP,
-    "kmv_shingles": SQL_KMV_SHINGLES,
-    "quantize_embeddings": SQL_QUANTIZE,
-    "pivot_order_matrix": SQL_PIVOT_MATRIX,
-    "unpivot_order_matrix": SQL_UNPIVOT_MATRIX,
-    "median_order_totals": SQL_MEDIAN_TOTALS,
-    "pii_redaction": SQL_PII_REDACTION,
-    "fuzzy_part_names": SQL_FUZZY_PARTS,
-    "pagerank_parts": SQL_PAGERANK_PARTS,
-    "json_props_events": SQL_JSON_PROPS,
-    "zorder_events": SQL_ZORDER_EVENTS,
-    "events_payload_layout": SQL_EVENTS_PAYLOAD_LAYOUT,
-    "rolling_revenue_7d": _oracle_double(SQL_ROLLING_7D, ["spend_7d"]),
-    "cdc_orders_diff": _oracle_double(
-        SQL_CDC_DIFF, ["old_total", "new_total"]
-    ),
-    "cdc_apply_orders": _oracle_double(SQL_CDC_APPLY, ["total"]),
-    "cdc_orders": SQL_CDC_ORDERS,
-    "containment_docs": SQL_CONTAINMENT,
-    "wav_decode_stats": SQL_WAV_STATS,
-    "resize_bmp_stats": SQL_RESIZE_BMP,
-    "tfidf_top_terms": SQL_TFIDF,
-    "mixture_docs": SQL_MIXTURE,
-    "pack_docs": SQL_PACK_DOCS,
-    "pack_nosplit_docs": SQL_PACK_NOSPLIT,
-    "decontam_docs": SQL_DECONTAM,
-    "bloom_orders": SQL_BLOOM_ORDERS,
-    "roundtrip_orc": SQL_RT_ORC,
-    "retry_dag": SQL_RETRY_DAG,
-    "iqr_outlier_docs": SQL_IQR_OUTLIERS,
-    "mad_outlier_docs": SQL_MAD_OUTLIERS,
-    "cube_orders": SQL_CUBE_ORDERS,
-    "hard_negatives": SQL_HARD_NEGATIVES,
-    "label_prototypes": SQL_LABEL_PROTOTYPES,
-    "ccnet_buckets_docs": SQL_CCNET_BUCKETS,
-    "semdedup_embeddings": SQL_SEMDEDUP,
-    "dedup_lines_docs": SQL_DEDUP_LINES,
-    "dup_spans_docs": SQL_DUP_SPANS,
-    "incremental_rollup_sales": _oracle_double(
-        SQL_AGG_DAILY, ["total_quantity", "total_gross", "total_net"]
-    ),
-    "cms_tokens_docs": SQL_CMS_TOKENS,
-    "weighted_sample_docs": SQL_WEIGHTED_SAMPLE,
-    "source_cap_docs": SQL_SOURCE_CAP,
-    "bpe_merges_docs": SQL_BPE_MERGES,
-    "gap_fill_events": SQL_GAP_FILL,
-    "agg_daily_rollup": SQL_AGG_DAILY_ROLLUP,
-    "kmeans_embeddings": SQL_KMEANS,
-    "neardup_prune_docs": SQL_NEARDUP_PRUNE,
-    "cluster_split_docs": SQL_CLUSTER_SPLIT,
-    "mixed_lang_docs": SQL_MIXED_LANG,
-    "cross_dedup_docs": SQL_CROSS_DEDUP,
-    "decay_events": SQL_DECAY_EVENTS,
-    "char_entropy_docs": SQL_CHAR_ENTROPY,
-    "temperature_mixture_docs": SQL_TEMPERATURE_MIXTURE,
-    "dsir_docs": SQL_DSIR,
-    "dsir_apply_docs": SQL_DSIR_APPLY,
-    "dsir_merge_docs": SQL_DSIR_APPLY,
-    "roundtrip_compact": SQL_RT_COMPACT,
-    "roundtrip_evolve": SQL_RT_EVOLVE,
-    "window_customer_orders": _oracle_double(
-        SQL_WINDOW_ORDERS, ["running_spend", "moving3_spend"]
-    ),
-    # minhash_pairs_docs / simhash_pairs_docs / lsh_topk_embeddings:
-    # xxhash64-based production paths — no DuckDB counterpart; driver records
-    # rows-only checks.  Their md5 twins above carry the full value-hash
-    # oracle for the same algorithms (same plan shape, portable hash).
-    # merged driver-window suites
-    "quality_validation_report": SQL_QUALITY_VALIDATION,
-    "containment_kmv_docs": SQL_CONTAINMENT_KMV,
-    "ann_topk_suite": SQL_ANN_TOPK_SUITE,
-    "events_windows": SQL_EVENTS_WINDOWS,
-    "events_totals_suite": SQL_EVENTS_TOTALS_SUITE,
-    "asof_range_joins": SQL_ASOF_RANGE_JOINS,
-    "orchestration_dag": SQL_ORCHESTRATION_DAG,
-    "multimodal_decode": SQL_MULTIMODAL_DECODE,
-    "image_phash_neardup": SQL_IMAGE_PHASH,
-    "image_phash_index": SQL_IMAGE_PHASH_INDEX,
-    "sampling_splits": SQL_SAMPLING_SPLITS,
-    "pii_tfidf_docs": SQL_PII_TFIDF,
-    "pivot_unpivot_orders": SQL_PIVOT_UNPIVOT,
-    "median_rolling_orders": SQL_MEDIAN_ROLLING,
-    "parts_fuzzy_pagerank": SQL_PARTS_FUZZY_PAGERANK,
-    "roundtrip_sinks": SQL_ROUNDTRIP_SINKS,
-    "join_strategies": SQL_JOIN_STRATEGIES,
-    "ci_collation_customers": SQL_CI_COLLATION,
-    "ci_group_customers": SQL_CI_GROUP,
-    "ci_filter_customers": SQL_CI_FILTER,
-    "ivf_recall_audit": SQL_IVF_RECALL,
-    "hybrid_rrf_indexed": SQL_HYBRID_RRF_INDEXED,
-    "time_contract_events": SQL_TIME_CONTRACT,
-    "bm25_search_docs": SQL_BM25_SEARCH,
-    "nb_classifier_docs": SQL_NB_CLASSIFIER,
-    "ivf_index_probe": SQL_IVF_INDEX_PROBE,
-    "bm25_index_probe": SQL_BM25_SEARCH,
-    "streaming_ivf_probe": SQL_STREAMING_IVF,
-    "streaming_bm25_probe": SQL_BM25_SEARCH,
-    "hybrid_rrf_docs": SQL_HYBRID_RRF,
-    "semantic_decontam_embeddings": SQL_SEMANTIC_DECONTAM,
-    "semantic_decontam_ivf": SQL_SEMANTIC_DECONTAM,
-    "shuffle_shards_docs": SQL_SHUFFLE_SHARDS,
-    "pivot_median_orders": SQL_PIVOT_MEDIAN,
-    "dtsx_sales_fact_etl": SQL_DTSX_SALES,
-    "dtsx_customer_load": SQL_DTSX_CUSTOMER,
-    "dtsx_inventory_sync": SQL_DTSX_INVENTORY,
-    "dtsx_packages": SQL_DTSX_PACKAGES,
-    "dtsx_order_routing": SQL_DTSX_ROUTING,
-    "fps_seeds": SQL_FPS_SEEDS,
-    "text_analysis_docs_expr": SQL_TEXT_ANALYSIS,
-}
+class Query(NamedTuple):
+    name: str
+    builder: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None = None
+    tags: str = ""
 
-# The 50 entries the driver verifies — every SURVEY §2 family and every
-# LLM-pipeline operator has a value-hashed row inside the window.  The three
-# xxhash64 rows-only entries are replaced by their fully-oracled md5 twins
-# (the xxhash paths stay pytest-covered and on the bench HEADLINE).
-_DRIVER_WINDOW = [
-    "stg_sales_transactions",
-    "fct_sales_star",
-    "agg_daily_rollup",
-    "dim_customer_scd2",
-    "expr_strings_customer",
-    "expr_dates_orders",
-    "conditional_split_sizes",
-    "top_events",
-    "union_merge_segments",
-    "orders_semi_join",
-    "fk_violations_current",
-    "duplicate_order_days",
-    "watermark_incremental_events",
-    "validation_scalars",
-    "incremental_merge_orders",
-    "quality_validation_report",
-    "exact_dedup_docs",
-    "text_analysis_docs",
-    "ngram_jaccard_docs",
-    "minhash_pairs_md5",
-    "simhash_pairs_md5",
-    "neardup_clusters",
-    "containment_kmv_docs",
-    "ann_topk_suite",
-    "embedding_neardup",
-    "events_windows",
-    "events_sessionize",
-    "streaming_roundtrip",
-    "events_totals_suite",
-    "asof_range_joins",
-    "pipeline_dag",
-    "merge_upsert_customers",
-    "script_escape_hatch",
-    "orchestration_dag",
-    "join_strategies",
-    "multimodal_decode",
-    "dataset_profile",
-    "corpus_curation",
-    "crawl_ingest_docs",
-    "sampling_splits",
-    "token_ops_docs",
-    "pii_tfidf_docs",
-    "sql_task_pricing",
-    "window_customer_orders",
-    "pivot_median_orders",
-    "dtsx_packages",
-    "cdc_orders",
-    "parts_fuzzy_pagerank",
-    "events_payload_layout",
-    "roundtrip_sinks",
+
+REGISTRY = (
+    # driver window (its order is the driver's query order)
+    Query("stg_sales_transactions", q_stg_sales_transactions,
+          _oracle_double(SQL_STG_SALES,
+                         ["gross_amount", "net_amount", "discount_pct"]),
+          "window core20"),
+    Query("fct_sales_star", q_fct_sales_star,
+          _oracle_double(SQL_FCT_SALES, ["net_amount"]), "window core20"),
+    Query("agg_daily_rollup", q_agg_daily_rollup,
+          SQL_AGG_DAILY_ROLLUP, "window"),
+    Query("dim_customer_scd2", q_dim_customer_scd2,
+          SQL_DIM_SCD2, "window core20"),
+    Query("expr_strings_customer", q_expr_strings_customer,
+          SQL_EXPR_STRINGS, "window"),
+    Query("expr_dates_orders", q_expr_dates_orders, SQL_EXPR_DATES, "window"),
+    Query("conditional_split_sizes", q_conditional_split_sizes,
+          SQL_SPLIT_SIZES, "window"),
+    Query("top_events", q_top_events, SQL_TOP_EVENTS, "window"),
+    Query("union_merge_segments", q_union_merge_segments,
+          SQL_UNION_MERGE, "window"),
+    Query("orders_semi_join", q_orders_semi_join, SQL_SEMI, "window core20"),
+    Query("fk_violations_current", q_fk_violations_current,
+          SQL_FK_VIOL, "window"),
+    Query("duplicate_order_days", q_duplicate_order_days,
+          SQL_DUP_DAYS, "window"),
+    Query("watermark_incremental_events", q_watermark_incremental_events,
+          SQL_WATERMARK, "window"),
+    Query("validation_scalars", q_validation_scalars,
+          SQL_VALIDATION_SCALARS, "window"),
+    Query("incremental_merge_orders", q_incremental_merge_orders,
+          SQL_INCR_MERGE, "window core20"),
+    Query("quality_validation_report", q_quality_validation_report,
+          SQL_QUALITY_VALIDATION, "window"),
+    Query("exact_dedup_docs", q_exact_dedup_docs,
+          SQL_EXACT_DEDUP, "window core20"),
+    Query("text_analysis_docs", q_text_analysis_docs,
+          SQL_TEXT_ANALYSIS, "window core20"),
+    Query("ngram_jaccard_docs", q_ngram_jaccard_docs,
+          SQL_NGRAM_JACCARD_SUITE, "window"),
+    Query("minhash_pairs_md5", q_minhash_pairs_md5,
+          SQL_MINHASH_MD5_SUITE, "window"),
+    Query("simhash_pairs_md5", q_simhash_pairs_md5, SQL_SIMHASH_MD5, "window"),
+    Query("neardup_clusters", q_neardup_clusters,
+          SQL_NEARDUP_CLUSTERS, "window"),
+    Query("containment_kmv_docs", q_containment_kmv_docs,
+          SQL_CONTAINMENT_KMV, "window"),
+    Query("ann_topk_suite", q_ann_topk_suite, SQL_ANN_TOPK_SUITE, "window"),
+    Query("embedding_neardup", q_embedding_neardup,
+          SQL_EMB_NEARDUP, "window core20"),
+    Query("events_windows", q_events_windows, SQL_EVENTS_WINDOWS, "window"),
+    Query("events_sessionize", q_events_sessionize,
+          SQL_SESSIONIZE, "window core20"),
+    Query("streaming_roundtrip", q_streaming_roundtrip,
+          SQL_STREAMING_RT, "window"),
+    Query("events_totals_suite", q_events_totals_suite,
+          SQL_EVENTS_TOTALS_SUITE, "window"),
+    Query("asof_range_joins", q_asof_range_joins,
+          SQL_ASOF_RANGE_JOINS, "window"),
+    Query("pipeline_dag", q_pipeline_dag,
+          _oracle_double(SQL_PIPELINE_DAG, ["total_net"]), "window"),
+    Query("merge_upsert_customers", q_merge_upsert_customers,
+          SQL_MERGE_UPSERT, "window core20"),
+    Query("script_escape_hatch", q_script_escape_hatch,
+          SQL_SCRIPT_HATCH, "window"),
+    Query("orchestration_dag", q_orchestration_dag,
+          SQL_ORCHESTRATION_DAG, "window"),
+    Query("join_strategies", q_join_strategies, SQL_JOIN_STRATEGIES, "window"),
+    Query("multimodal_decode", q_multimodal_decode,
+          SQL_MULTIMODAL_DECODE, "window"),
+    Query("dataset_profile", q_dataset_profile, SQL_DATASET_PROFILE, "window"),
+    Query("corpus_curation", q_corpus_curation_suite,
+          SQL_CORPUS_CURATION_SUITE, "window"),
+    Query("crawl_ingest_docs", q_crawl_ingest_docs,
+          SQL_CRAWL_INGEST_SUITE, "window bench"),
+    Query("sampling_splits", q_sampling_splits, SQL_SAMPLING_SPLITS, "window"),
+    Query("token_ops_docs", q_token_ops_docs, SQL_TOKEN_OPS, "window"),
+    Query("pii_tfidf_docs", q_pii_tfidf_docs, SQL_PII_TFIDF, "window"),
+    Query("sql_task_pricing", q_sql_task_pricing,
+          SQL_PRICING_SUMMARY, "window"),
+    Query("window_customer_orders", q_window_customer_orders,
+          _oracle_double(SQL_WINDOW_ORDERS,
+                         ["running_spend", "moving3_spend"]),
+          "window core20"),
+    Query("pivot_median_orders", q_pivot_median_orders,
+          SQL_PIVOT_MEDIAN, "window"),
+    Query("dtsx_packages", q_dtsx_packages, SQL_DTSX_PACKAGES, "window"),
+    Query("cdc_orders", q_cdc_orders, SQL_CDC_ORDERS, "window"),
+    Query("parts_fuzzy_pagerank", q_parts_fuzzy_pagerank,
+          SQL_PARTS_FUZZY_PAGERANK, "window"),
+    Query("events_payload_layout", q_events_payload_layout,
+          SQL_EVENTS_PAYLOAD_LAYOUT, "window"),
+    Query("roundtrip_sinks", q_roundtrip_sinks, SQL_ROUNDTRIP_SINKS, "window"),
+
+    # bench-only entries
+    Query("agg_daily_sales", q_agg_daily_sales,
+          _oracle_double(SQL_AGG_DAILY,
+                         ["total_quantity", "total_gross", "total_net"]),
+          "core20"),
+    Query("events_tumbling_10min", q_events_tumbling_10min,
+          _oracle_double(SQL_TUMBLING, ["sum_value"]), "core20"),
+    # xxhash64 production paths have no DuckDB counterpart (rows-only);
+    # their md5 twins in the window carry the oracle for the same algorithms
+    Query("minhash_pairs_docs", q_minhash_pairs_docs, None, "core20"),
+    Query("simhash_pairs_docs", q_simhash_pairs_docs, None, "core20"),
+    Query("topk_embeddings", q_topk_embeddings, SQL_TOPK_EMB, "core20"),
+    Query("lsh_topk_embeddings", q_lsh_topk_embeddings, None, "core20"),
+    Query("knn_join_embeddings", q_knn_join_embeddings,
+          SQL_KNN_JOIN, "core20"),
+    Query("events_sliding_30min", q_events_sliding_30min,
+          SQL_SLIDING, "core20"),
+    Query("ivf_topk_embeddings", q_ivf_topk, SQL_IVF_TOPK, "core20"),
+    Query("asof_attribution", q_asof_attribution,
+          SQL_ASOF_ATTRIBUTION, "bench"),
+    Query("range_join_sessions", q_range_join_sessions,
+          SQL_RANGE_JOIN, "bench"),
+    Query("chunk_docs", q_chunk_docs, SQL_CHUNK_DOCS, "bench"),
+    Query("surprisal_docs", q_surprisal_docs, SQL_SURPRISAL, "bench"),
+    Query("decontam_docs", q_decontam_docs, SQL_DECONTAM, "bench"),
+    Query("pack_docs", q_pack_docs, SQL_PACK_DOCS, "bench"),
+    Query("mixture_docs", q_mixture_docs, SQL_MIXTURE, "bench"),
+    Query("bloom_orders", q_bloom_orders, SQL_BLOOM_ORDERS, "bench"),
+    Query("semdedup_embeddings", q_semdedup_embeddings, SQL_SEMDEDUP, "bench"),
+    Query("cdc_apply_orders", q_cdc_apply_orders,
+          _oracle_double(SQL_CDC_APPLY, ["total"]), "bench"),
+    Query("incremental_rollup_sales", q_incremental_rollup_sales,
+          _oracle_double(SQL_AGG_DAILY,
+                         ["total_quantity", "total_gross", "total_net"]),
+          "bench"),
+    Query("dup_spans_docs", q_dup_spans_docs, SQL_DUP_SPANS, "bench"),
+    Query("zorder_events", q_zorder_events, SQL_ZORDER_EVENTS, "bench"),
+    Query("resize_bmp_stats", q_resize_bmp_stats, SQL_RESIZE_BMP, "bench"),
+    Query("source_cap_docs", q_source_cap_docs, SQL_SOURCE_CAP, "bench"),
+    Query("dtsx_sales_fact_etl", q_dtsx_sales_fact_etl,
+          SQL_DTSX_SALES, "bench"),
+    Query("gopher_quality_docs", q_gopher_quality_docs,
+          SQL_GOPHER_QUALITY, "bench"),
+    Query("hll_users_events", q_hll_users_events,
+          SQL_HLL_USERS_EVENTS, "bench"),
+    Query("bpe_encode_docs", q_bpe_encode_docs, SQL_BPE_ENCODE, "bench"),
+    Query("winnow_docs", q_winnow_docs, SQL_WINNOW, "bench"),
+    Query("funnel_events", q_funnel_events, SQL_FUNNEL, "bench"),
+    Query("project_embeddings", q_project_embeddings,
+          SQL_PROJECT_EMBEDDINGS, "bench"),
+    Query("sorted_neighborhood_parts", q_sorted_neighborhood_parts,
+          SQL_SORTED_NEIGHBORHOOD, "bench"),
+    Query("cohort_retention_events", q_cohort_retention_events,
+          SQL_COHORT_RETENTION, "bench"),
+    Query("merged_intervals_events", q_merged_intervals_events,
+          SQL_MERGED_INTERVALS, "bench"),
+    Query("mad_outlier_docs", q_mad_outlier_docs, SQL_MAD_OUTLIERS, "bench"),
+    Query("kfold_docs", q_kfold_docs, SQL_KFOLD, "bench"),
+    Query("cube_orders", q_cube_orders, SQL_CUBE_ORDERS, "bench"),
+    Query("hard_negatives", q_hard_negatives, SQL_HARD_NEGATIVES, "bench"),
+    Query("split_leakage_docs", q_split_leakage_docs,
+          SQL_SPLIT_LEAKAGE, "bench"),
+    Query("corpus_dedup_lines", q_corpus_dedup_lines,
+          SQL_CORPUS_DEDUP_LINES, "bench"),
+    Query("label_prototypes", q_label_prototypes,
+          SQL_LABEL_PROTOTYPES, "bench"),
+    Query("ccnet_buckets_docs", q_ccnet_buckets_docs,
+          SQL_CCNET_BUCKETS, "bench"),
+    Query("kmeans_embeddings", q_kmeans_embeddings, SQL_KMEANS, "bench"),
+    Query("neardup_prune_docs", q_neardup_prune_docs,
+          SQL_NEARDUP_PRUNE, "bench"),
+    Query("char_entropy_docs", q_char_entropy_docs, SQL_CHAR_ENTROPY, "bench"),
+    Query("temperature_mixture_docs", q_temperature_mixture_docs,
+          SQL_TEMPERATURE_MIXTURE, "bench"),
+    Query("dsir_docs", q_dsir_docs, SQL_DSIR, "bench"),
+    Query("dsir_apply_docs", q_dsir_apply_docs, SQL_DSIR_APPLY, "bench"),
+    Query("curation_pipeline_docs", q_curation_pipeline_docs,
+          SQL_CURATION_PIPELINE, "bench"),
+    Query("pack_nosplit_docs", q_pack_nosplit_docs, SQL_PACK_NOSPLIT, "bench"),
+    Query("bm25_search_docs", q_bm25_search_docs, SQL_BM25_SEARCH, "bench"),
+    Query("nb_classifier_docs", q_nb_classifier_docs,
+          SQL_NB_CLASSIFIER, "bench"),
+    Query("ivf_index_probe", q_ivf_index_probe, SQL_IVF_INDEX_PROBE, "bench"),
+    Query("semantic_decontam_ivf", q_semantic_decontam_ivf,
+          SQL_SEMANTIC_DECONTAM, "bench"),
+    Query("ci_filter_customers", q_ci_filter_customers,
+          SQL_CI_FILTER, "bench"),
+    Query("ivf_recall_audit", q_ivf_recall_audit, SQL_IVF_RECALL, "bench"),
+    Query("hybrid_rrf_indexed", q_hybrid_rrf_indexed,
+          SQL_HYBRID_RRF_INDEXED, "bench"),
+    Query("image_phash_neardup", q_image_phash_neardup,
+          SQL_IMAGE_PHASH, "bench"),
+    Query("image_phash_index", q_image_phash_index,
+          SQL_IMAGE_PHASH_INDEX, "bench"),
+
+    # registry-only entries
+    Query("quality_report", q_quality_report, SQL_QUALITY),
+    Query("lsh_topk_md5", q_lsh_topk_md5, SQL_LSH_TOPK_MD5),
+    Query("multimodal_features", q_multimodal_features, SQL_MULTIMODAL),
+    Query("bmp_decode_stats", q_bmp_decode_stats, SQL_BMP_STATS),
+    Query("png_decode_stats", q_png_decode_stats, SQL_PNG_STATS),
+    Query("jpeg_decode_stats", q_jpeg_decode_stats, SQL_JPEG_STATS),
+    Query("corpus_curation_enrich", q_corpus_curation, SQL_CORPUS_CURATION),
+    Query("crawl_wb_dedup_docs", q_crawl_wb_dedup_docs, SQL_CRAWL_WB_DEDUP),
+    Query("hash_split_docs", q_hash_split_docs, SQL_HASH_SPLIT),
+    Query("token_budget_docs", q_token_budget_docs, SQL_TOKEN_BUDGET),
+    Query("roundtrip_append", q_roundtrip_append, SQL_RT_APPEND),
+    Query("roundtrip_overwrite", q_roundtrip_overwrite, SQL_RT_OVERWRITE),
+    Query("roundtrip_partition_overwrite", q_roundtrip_partition_overwrite,
+          SQL_RT_DPO),
+    Query("roundtrip_csv", q_roundtrip_csv, SQL_RT_CSV),
+    Query("roundtrip_json", q_roundtrip_json, SQL_RT_JSON),
+    Query("roundtrip_audit_update", q_roundtrip_audit_update, SQL_RT_AUDIT),
+    Query("salted_agg_events", q_salted_agg_events, SQL_SALTED_AGG),
+    Query("foreach_segments", q_foreach_segments, SQL_FOREACH),
+    Query("bucketed_join_orders", q_bucketed_join_orders, SQL_BUCKETED_JOIN),
+    Query("validation_rollup", q_validation_rollup, SQL_VALIDATION_ROLLUP),
+    Query("parallel_table_dag", q_parallel_table_dag, SQL_PARALLEL_DAG),
+    Query("roundtrip_excel", q_roundtrip_excel, SQL_RT_EXCEL),
+    Query("roundtrip_xls", q_roundtrip_xls, SQL_RT_EXCEL),
+    Query("roundtrip_orc", q_roundtrip_orc, SQL_RT_ORC),
+    Query("roundtrip_compact", q_roundtrip_compact, SQL_RT_COMPACT),
+    Query("roundtrip_evolve", q_roundtrip_evolve, SQL_RT_EVOLVE),
+    Query("rest_landing", q_rest_landing, SQL_REST_LANDING),
+    Query("stratified_docs", q_stratified_docs, SQL_STRATIFIED),
+    Query("stateful_totals", q_stateful_totals, SQL_STATEFUL_TOTALS),
+    Query("events_rollup", q_events_rollup, SQL_EVENTS_ROLLUP),
+    Query("kmv_shingles", q_kmv_shingles, SQL_KMV_SHINGLES),
+    Query("quantize_embeddings", q_quantize_embeddings, SQL_QUANTIZE),
+    Query("pivot_order_matrix", q_pivot_order_matrix, SQL_PIVOT_MATRIX),
+    Query("unpivot_order_matrix", q_unpivot_order_matrix, SQL_UNPIVOT_MATRIX),
+    Query("median_order_totals", q_median_order_totals, SQL_MEDIAN_TOTALS),
+    Query("pii_redaction", q_pii_redaction, SQL_PII_REDACTION),
+    Query("fuzzy_part_names", q_fuzzy_part_names, SQL_FUZZY_PARTS),
+    Query("pagerank_parts", q_pagerank_parts, SQL_PAGERANK_PARTS),
+    Query("json_props_events", q_json_props_events, SQL_JSON_PROPS),
+    Query("rolling_revenue_7d", q_rolling_revenue_7d,
+          _oracle_double(SQL_ROLLING_7D, ["spend_7d"])),
+    Query("cdc_orders_diff", q_cdc_orders_diff,
+          _oracle_double(SQL_CDC_DIFF, ["old_total", "new_total"])),
+    Query("containment_docs", q_containment_docs, SQL_CONTAINMENT),
+    Query("wav_decode_stats", q_wav_decode_stats, SQL_WAV_STATS),
+    Query("tfidf_top_terms", q_tfidf_top_terms, SQL_TFIDF),
+    Query("retry_dag", q_retry_dag, SQL_RETRY_DAG),
+    Query("iqr_outlier_docs", q_iqr_outlier_docs, SQL_IQR_OUTLIERS),
+    Query("dedup_lines_docs", q_dedup_lines_docs, SQL_DEDUP_LINES),
+    Query("cms_tokens_docs", q_cms_tokens_docs, SQL_CMS_TOKENS),
+    Query("weighted_sample_docs", q_weighted_sample_docs, SQL_WEIGHTED_SAMPLE),
+    Query("bpe_merges_docs", q_bpe_merges_docs, SQL_BPE_MERGES),
+    Query("gap_fill_events", q_gap_fill_events, SQL_GAP_FILL),
+    Query("cluster_split_docs", q_cluster_split_docs, SQL_CLUSTER_SPLIT),
+    Query("mixed_lang_docs", q_mixed_lang_docs, SQL_MIXED_LANG),
+    Query("cross_dedup_docs", q_cross_dedup_docs, SQL_CROSS_DEDUP),
+    Query("decay_events", q_decay_events, SQL_DECAY_EVENTS),
+    Query("dsir_merge_docs", q_dsir_merge_docs, SQL_DSIR_APPLY),
+    Query("pivot_unpivot_orders", q_pivot_unpivot_orders, SQL_PIVOT_UNPIVOT),
+    Query("median_rolling_orders", q_median_rolling_orders,
+          SQL_MEDIAN_ROLLING),
+    Query("dtsx_customer_load", q_dtsx_customer_load, SQL_DTSX_CUSTOMER),
+    Query("dtsx_inventory_sync", q_dtsx_inventory_sync, SQL_DTSX_INVENTORY),
+    Query("dtsx_order_routing", q_dtsx_order_routing, SQL_DTSX_ROUTING),
+    Query("fps_seeds", q_fps_seeds, SQL_FPS_SEEDS),
+    Query("text_analysis_docs_expr", q_text_analysis_docs_expr,
+          SQL_TEXT_ANALYSIS),
+    Query("ci_collation_customers", q_ci_collation_customers,
+          SQL_CI_COLLATION),
+    Query("ci_group_customers", q_ci_group_customers, SQL_CI_GROUP),
+    Query("time_contract_events", q_time_contract_events, SQL_TIME_CONTRACT),
+    Query("bm25_index_probe", q_bm25_index_probe, SQL_BM25_SEARCH),
+    Query("streaming_ivf_probe", q_streaming_ivf_probe, SQL_STREAMING_IVF),
+    Query("streaming_bm25_probe", q_streaming_bm25_probe, SQL_BM25_SEARCH),
+    Query("hybrid_rrf_docs", q_hybrid_rrf_docs, SQL_HYBRID_RRF),
+    Query("semantic_decontam_embeddings", q_semantic_decontam_embeddings,
+          SQL_SEMANTIC_DECONTAM),
+    Query("shuffle_shards_docs", q_shuffle_shards_docs, SQL_SHUFFLE_SHARDS),
+)
+
+assert all(
+    set(q.tags.split()) <= {"window", "core20", "bench"} for q in REGISTRY
+)
+assert len({q.name for q in REGISTRY}) == len(REGISTRY)
+
+ALL_QUERIES = {q.name: blocks.scoped(q.builder) for q in REGISTRY}
+ALL_ORACLES = {q.name: q.oracle for q in REGISTRY if q.oracle is not None}
+_WINDOW = [q.name for q in REGISTRY if "window" in q.tags.split()]
+assert len(_WINDOW) == 50, len(_WINDOW)
+QUERIES = {name: ALL_QUERIES[name] for name in _WINDOW}
+ORACLES = {name: ALL_ORACLES[name] for name in _WINDOW if name in ALL_ORACLES}
+CORE20 = [q.name for q in REGISTRY if "core20" in q.tags.split()]
+assert len(CORE20) == 20, len(CORE20)
+HEADLINE = [
+    q.name for q in REGISTRY if {"core20", "bench"} & set(q.tags.split())
 ]
-
-assert len(_DRIVER_WINDOW) == 50, len(_DRIVER_WINDOW)
-
-QUERIES = {name: ALL_QUERIES[name] for name in _DRIVER_WINDOW}
-ORACLES = {
-    name: ALL_ORACLES[name] for name in _DRIVER_WINDOW if name in ALL_ORACLES
-}

@@ -1,17 +1,28 @@
-"""Dump formatted physical plans for the flagship queries into PLANS.md.
+"""Dump formatted physical plans of registry queries.
 
 The scale argument in SCALE.md is enforced by plan-shape asserts in
 tests/test_plans.py; this artifact makes the actual plans reviewable without
-running Spark.  Regenerate after any operator change:
+running Spark.
 
-    python tools/dump_plans.py
+Usage: python tools/dump_plans.py [name ...] [--plans DIR] [--sf DIR]
+
+With no names the flagship queries below are dumped; without ``--plans``
+the plans go to PLANS.md (regenerate it after any operator change), with
+``--plans DIR`` to one ``DIR/<name>.txt`` per query (the optimization-round
+before/after artifact, e.g. ``plans/r14/``).  ``--sf`` defaults to the
+sf0.001 test data: plan shapes are data-size independent except for the
+driver-side decisions that look at input size.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from ssis_to_dbt_spark import catalog  # noqa: E402
+from ssis_to_dbt_spark.run import session  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,42 +82,62 @@ SHOWCASE = {
 # production pipeline checkpoints eagerly, which truncates the lineage
 # out of the explain)
 OVERRIDES = {
-    "curation_pipeline_docs": lambda spark, sf: __import__(
-        "ssis_to_dbt_spark.catalog", fromlist=["catalog"]
-    ).q_curation_pipeline_docs(spark, sf, checkpoint=False),
+    "curation_pipeline_docs": lambda spark, sf: catalog.q_curation_pipeline_docs(
+        spark, sf, checkpoint=False
+    ),
 }
 
 
-def main() -> None:
-    from ssis_to_dbt_spark import catalog
-    from ssis_to_dbt_spark.session import build_session
+def _option(args: list[str], flag: str, default: str | None) -> str | None:
+    if flag not in args:
+        return default
+    i = args.index(flag)
+    value = args[i + 1]
+    del args[i : i + 2]
+    return value
 
-    spark = build_session(
-        shuffle_partitions=8,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+
+def main() -> int:
+    args = sys.argv[1:]
+    plans_dir = _option(args, "--plans", None)
+    sf_dir = _option(args, "--sf", SF)
+    unknown = sorted(set(args) - set(catalog.ALL_QUERIES))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
+    names = args or list(SHOWCASE)
+
+    spark = session("dump_plans", shuffle_partitions=8)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     out = [
         "# PLANS — formatted physical plans of the flagship queries",
         "",
-        "Generated by `python tools/dump_plans.py` at sf0.001 (plan shapes are",
+        f"Generated by `python tools/dump_plans.py` at {os.path.basename(sf_dir)}"
+        " (plan shapes are",
         "data-size independent; AQE leaves these static shapes intact).",
         "Shape regressions fail `tests/test_plans.py`.",
         "",
     ]
-    for name, why in SHOWCASE.items():
+    if plans_dir:
+        os.makedirs(plans_dir, exist_ok=True)
+    for name in names:
         fn = OVERRIDES.get(name, catalog.ALL_QUERIES[name])
-        df = fn(spark, SF)
-        plan = df._jdf.queryExecution().explainString(mode)
-        out += [f"## {name}", "", f"*{why}*", "", "```", plan.rstrip(), "```", ""]
-    with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"PLANS.md written ({len(SHOWCASE)} plans)")
+        plan = fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
+        if plans_dir:
+            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
+                fh.write(plan)
+            continue
+        why = [f"*{SHOWCASE[name]}*", ""] if name in SHOWCASE else []
+        out += [f"## {name}", "", *why, "```", plan.rstrip(), "```", ""]
+    if not plans_dir:
+        with open("PLANS.md", "w") as f:
+            f.write("\n".join(out))
+    print(f"{len(names)} plans written to {plans_dir or 'PLANS.md'}")
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
